@@ -14,7 +14,8 @@ with many rounds should truncate lineage periodically:
 ``SPARK_GRAFT_CHECKPOINT_EVERY`` (default 8) makes every Nth round a
 lazy ``localCheckpoint`` — plan truncated to the checkpointed RDD, no
 extra job (it materializes with the round's own first action). Set it
-to 0 to disable checkpointing entirely (pure persist).
+to 0 to disable checkpointing entirely (pure persist); any other
+non-integer or negative value raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -31,10 +32,19 @@ DEFAULT_CHECKPOINT_EVERY = 8
 
 
 def checkpoint_every() -> int:
-    try:
-        return int(os.environ.get("SPARK_GRAFT_CHECKPOINT_EVERY", ""))
-    except ValueError:
+    raw = os.environ.get("SPARK_GRAFT_CHECKPOINT_EVERY")
+    if raw is None:
         return DEFAULT_CHECKPOINT_EVERY
+    try:
+        every = int(raw)
+        if every >= 0:
+            return every
+    except ValueError:
+        pass
+    raise ValueError(
+        "SPARK_GRAFT_CHECKPOINT_EVERY must be a non-negative integer,"
+        f" got {raw!r}"
+    )
 
 
 def bound_round_lineage(df: DataFrame, rnd: int) -> DataFrame:

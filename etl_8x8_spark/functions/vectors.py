@@ -2,10 +2,15 @@
 
 Floating-point summation is order-dependent, so the dot products and
 norms used by the similarity operators fold LEFT over the array in both
-engines: Spark ``F.aggregate`` is a sequential left fold, and DuckDB
+engines: Spark ``aggregate`` is a sequential left fold, and DuckDB
 ``list_reduce`` folds left too — same element order, same IEEE ops,
 bit-identical doubles, so even comparisons/orderings derived from the
 values agree across engines.
+
+Each Spark form is SQL text over SQL operand expressions, wrapped in
+``F.expr`` (or ``selectExpr``) at the call site: one string per tree
+instead of a py4j round-trip per lambda ``zip_with``/``aggregate``
+op. The ``oracle_*`` functions are the hand-written DuckDB twins.
 
 Everything here is a built-in higher-order function (whole-stage
 codegen'd, JVM-side) — no UDF in the vector hot path.
@@ -13,34 +18,9 @@ codegen'd, JVM-side) — no UDF in the vector hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-
-def dot(a: Column, b: Column) -> Column:
+def dot(a: str, b: str) -> str:
     """Σ a_i·b_i as a left-fold over doubles."""
-    products = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def norm(a: Column) -> Column:
-    """Euclidean norm, same fold order as :func:`dot`."""
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine similarity with precomputed norms (norms are computed
-    once per row, not once per pair)."""
-    return dot(a, b) / (norm_a * norm_b)
-
-
-def dot_sql(a: str, b: str) -> str:
-    """Spark-SQL string twin of :func:`dot` — the IDENTICAL left fold
-    assembled as one expression string instead of two lambda
-    higher-order-function Column ops (guide §4.4: each F.zip_with /
-    F.aggregate lambda costs multiple py4j round-trips per build;
-    the string form costs none). Same analyzed plan, bit-identical
-    doubles."""
     return (
         f"aggregate(zip_with({a}, {b},"
         " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -48,9 +28,15 @@ def dot_sql(a: str, b: str) -> str:
     )
 
 
-def norm_sql(a: str) -> str:
-    """Spark-SQL string twin of :func:`norm` (same fold order)."""
-    return f"sqrt({dot_sql(a, a)})"
+def norm(a: str) -> str:
+    """Euclidean norm, same fold order as :func:`dot`."""
+    return f"sqrt({dot(a, a)})"
+
+
+def cosine(a: str, b: str, norm_a: str, norm_b: str) -> str:
+    """Cosine similarity with precomputed norms (norms are computed
+    once per row, not once per pair)."""
+    return f"({dot(a, b)} / ({norm_a} * {norm_b}))"
 
 
 def oracle_dot(a: str, b: str) -> str:

@@ -2955,7 +2955,7 @@ def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = spend.agg(F.sum("s_u").alias("tot_u"))
     cum = ranked.crossJoin(F.broadcast(tot)).select(
-        ntile_from_rank(F.col("rk"), F.col("n"), 10).alias("decile"),
+        F.expr(ntile_from_rank("rk", "n", 10)).alias("decile"),
         "rk",
         "n",
         F.col("cum").alias("cum_u"),

@@ -90,37 +90,36 @@ def seeded_near_corpus(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").unionByName(variants)
 
 
-def normalized(text: Column = None):  # type: ignore[assignment]
+# The dedup family's Spark expressions are SQL text, wrapped in F.expr
+# at the call site: the whole tree crosses py4j as one string instead
+# of hundreds of chained Column/lambda ops. Each has a hand-written
+# DuckDB oracle twin (the *_SQL / *_sql names), never generated from
+# the Spark text. '\\s+' unescapes to the \s+ regex under the default
+# parser; pin_session_confs keeps spark.sql.parser.escapedStringLiterals
+# off so a driver-supplied session cannot flip it.
+
+
+def normalized(col: str = "text") -> str:
     """lower + trim + collapse internal whitespace."""
-    c = F.col("text") if text is None else text
-    return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
+    return rf"lower(trim(regexp_replace({col}, '\\s+', ' ')))"
 
 
 _NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
 
-def tokens(col=None):
-    c = normalized(col)
-    return F.split(c, " ")
+def tokens(col: str = "text") -> str:
+    return f"split({normalized(col)}, ' ')"
 
 
 _TOKENS_SQL = f"string_split({_NORM_SQL}, ' ')"
 
-# Spark-SQL string twin of tokens() (guide §4.4: the dedup family's
-# expression stacks are assembled as SQL strings at the hot call
-# sites — identical trees, a handful of py4j calls instead of
-# hundreds of chained Column/lambda ops). '\\s+' unescapes to the
-# same \s+ pattern the Column form passes verbatim.
-_NORM_SQLX = r"lower(trim(regexp_replace(text, '\\s+', ' ')))"
-_TOKENS_SQLX = f"split({_NORM_SQLX}, ' ')"
 
-
-def shingles(tok_col: Column, n: int = 3) -> Column:
+def shingles(toks: str, n: int = 3) -> str:
     """Word n-gram shingle set (distinct).
 
     Built from n shifted slices folded with ``zip_with`` — NOT a
-    ``transform`` over positions with ``slice(tok_col, i, n)`` inside
-    the lambda: when ``tok_col`` is an expression (the usual
+    ``transform`` over positions with ``slice(toks, i, n)`` inside
+    the lambda: when ``toks`` is an expression (the usual
     ``tokens()`` split), a lambda that references it re-derives the
     whole split per OUTPUT ELEMENT, turning shingling O(tokens²) in
     split evaluations (measured 2-6× slowdowns across the dedup
@@ -128,27 +127,6 @@ def shingles(tok_col: Column, n: int = 3) -> Column:
     ROW. ``zip_with`` pads the shorter side with NULL and
     ``concat_ws`` skips NULLs, which exactly reproduces the
     end-of-array truncation of the positional form for short docs."""
-    m = F.greatest(F.size(tok_col) - (n - 1), F.lit(1))
-    acc = F.slice(tok_col, 1, m)
-    for k in range(2, n + 1):
-        acc = F.zip_with(
-            acc, F.slice(tok_col, k, m), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return F.array_distinct(acc)
-
-
-def _shingles_sql(toks: str, n: int = 3) -> str:
-    return (
-        f"list_distinct(list_transform("
-        f"generate_series(1, greatest(len({toks}) - {n - 1}, 1)),"
-        f" i -> array_to_string(({toks})[i:i+{n - 1}], ' ')))"
-    )
-
-
-def _shingles_sqlx(toks: str, n: int = 3) -> str:
-    """Spark-SQL string twin of :func:`shingles` — the same shifted-
-    slice zip_with fold, token expression referenced O(n) times per
-    row (never per element)."""
     m = f"greatest(size({toks}) - {n - 1}, 1)"
     acc = f"slice({toks}, 1, {m})"
     for k in range(2, n + 1):
@@ -157,6 +135,14 @@ def _shingles_sqlx(toks: str, n: int = 3) -> str:
             " (a, b) -> concat_ws(' ', a, b))"
         )
     return f"array_distinct({acc})"
+
+
+def _shingles_sql(toks: str, n: int = 3) -> str:
+    return (
+        f"list_distinct(list_transform("
+        f"generate_series(1, greatest(len({toks}) - {n - 1}, 1)),"
+        f" i -> array_to_string(({toks})[i:i+{n - 1}], ' ')))"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -188,7 +174,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     corpus = seeded_exact_corpus(load_table(spark, sf_dir, "documents"))
     return (
-        corpus.select("doc_id", F.sha2(normalized(), 256).alias("content_hash"))
+        corpus.select("doc_id", F.sha2(F.expr(normalized()), 256).alias("content_hash"))
         .groupBy("content_hash")
         .agg(
             F.count("*").alias("n_copies"),
@@ -212,11 +198,8 @@ _JACCARD_THRESHOLD = 0.7
 _BLOCK_KEY_SQL = f"substr({_NORM_SQL}, 1, 32)"
 
 
-def _block_key() -> Column:
-    return F.substring(normalized(), 1, 32)
-
-
-_BLOCK_KEY_SQLX = f"substring({_NORM_SQLX}, 1, 32)"
+def _block_key() -> str:
+    return f"substring({normalized()}, 1, 32)"
 
 
 @register(
@@ -261,8 +244,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and tools/verify_queries.py both do).
     sh = corpus.select(
         "doc_id",
-        F.expr(_BLOCK_KEY_SQLX).alias("block_key"),
-        F.expr(_shingles_sqlx(_TOKENS_SQLX)).alias("sset"),
+        F.expr(_block_key()).alias("block_key"),
+        F.expr(shingles(tokens())).alias("sset"),
     ).persist()
     a = sh.alias("a")
     b = sh.alias("b")
@@ -365,8 +348,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (lifecycle: see the persist-barrier note in dedup_ngram_jaccard)
     sh = corpus.select(
         "doc_id",
-        F.expr(_BLOCK_KEY_SQLX).alias("block_key"),
-        F.expr(_shingles_sqlx(_TOKENS_SQLX)).alias("sset"),
+        F.expr(_block_key()).alias("block_key"),
+        F.expr(shingles(tokens())).alias("sset"),
     ).persist()
     a = sh.alias("a")
     b = sh.alias("b")
@@ -418,25 +401,13 @@ _PH_B_MUL = 2_654_435_761
 _PH_B_MOD = 1 << 32
 
 
-def token_hashes(tok_col: Column) -> Column:
+def token_hashes(toks: str) -> str:
     """Portable per-token polynomial hash (char left-fold mod P).
 
     One fold per token — shingle hashes then combine these O(1) per
     shingle instead of re-hashing ~3x the characters per shingle.
     Pass a MATERIALIZED column to consumers that slice it (each slice
     reference re-evaluates the expression)."""
-    return F.transform(
-        tok_col,
-        lambda t: F.aggregate(
-            F.transform(F.split(t, ""), lambda c: F.ascii(c).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, v: (acc * _PH_CHAR_MUL + v) % _PH_P,
-        ),
-    )
-
-
-def _token_hashes_sqlx(toks: str) -> str:
-    """Spark-SQL string twin of :func:`token_hashes`."""
     return (
         f"transform({toks}, t -> aggregate("
         "transform(split(t, ''), c -> CAST(ascii(c) AS BIGINT)),"
@@ -456,27 +427,12 @@ def _token_hashes_sql(toks: str) -> str:
     )
 
 
-def shingle_hashes(th: Column, n: int = 3) -> Column:
+def shingle_hashes(th: str, n: int = 3) -> str:
     """Order-sensitive hash of every word n-gram, combined from the
     per-token hashes with the same shifted-slice zip as
     :func:`shingles` (short docs truncate identically: a NULL slice
     element leaves the accumulator unchanged, mirroring concat_ws
     skipping NULLs)."""
-    m = F.greatest(F.size(th) - (n - 1), F.lit(1))
-    acc = F.slice(th, 1, m)
-    for k in range(2, n + 1):
-        acc = F.zip_with(
-            acc,
-            F.slice(th, k, m),
-            lambda a, b: F.when(b.isNull(), a).otherwise(
-                (a * _PH_TOK_MUL + b) % _PH_P
-            ),
-        )
-    return acc
-
-
-def _shingle_hashes_sqlx(th: str, n: int = 3) -> str:
-    """Spark-SQL string twin of :func:`shingle_hashes`."""
     m = f"greatest(size({th}) - {n - 1}, 1)"
     acc = f"slice({th}, 1, {m})"
     for k in range(2, n + 1):
@@ -503,7 +459,7 @@ def _shingle_hashes_sql(th: str, n: int = 3) -> str:
     )
 
 
-def minhash_signature(sh: Column) -> Column:
+def minhash_signature(sh: str) -> str:
     """32-function MinHash signature as a SINGLE left fold over the
     shingle hashes: acc_i = min(acc_i, (a + i·b) mod P) with
     b = Knuth-multiplicative(a).
@@ -514,26 +470,6 @@ def minhash_signature(sh: Column) -> Column:
     expressions, which would otherwise re-hash every shingle once per
     function. min over the multiset == min over the set, so the input
     needs no array_distinct."""
-    init = F.array_repeat(F.lit(1 << 62).cast("long"), _MINHASH_FUNCS)
-    idx = F.sequence(F.lit(0), F.lit(_MINHASH_FUNCS - 1))
-    pairs = F.transform(
-        sh, lambda a: F.array(a, (a * _PH_B_MUL) % _PH_B_MOD)
-    )
-    return F.aggregate(
-        pairs,
-        init,
-        lambda acc, p: F.zip_with(
-            acc,
-            idx,
-            lambda m, i: F.least(
-                m, (F.element_at(p, 1) + i * F.element_at(p, 2)) % _PH_P
-            ),
-        ),
-    )
-
-
-def _minhash_signature_sqlx(sh: str) -> str:
-    """Spark-SQL string twin of :func:`minhash_signature`."""
     init = f"array_repeat(CAST({1 << 62} AS BIGINT), {_MINHASH_FUNCS})"
     idx = f"sequence(0, {_MINHASH_FUNCS - 1})"
     pairs = f"transform({sh}, a -> array(a, (a * {_PH_B_MUL}) % {_PH_B_MOD}))"
@@ -560,22 +496,11 @@ def _minhash_signature_sql(sh: str) -> str:
     )
 
 
-def band_hashes(sig: Column) -> Column:
+def band_hashes(sig: str) -> str:
     """Band the signature: a polynomial fold over each r-row slice
     (slices addressed positionally so ``sig`` should be a materialized
     column, not a re-evaluated expression). Signature entries are
     < P, so the fold never overflows."""
-    bands = []
-    for b in range(_BANDS):
-        h = F.lit(0).cast("long")
-        for r in range(_ROWS_PER_BAND):
-            h = (h * _PH_TOK_MUL + F.element_at(sig, b * _ROWS_PER_BAND + r + 1)) % _PH_P
-        bands.append(h)
-    return F.array(*bands)
-
-
-def _band_hashes_sqlx(sig: str) -> str:
-    """Spark-SQL string twin of :func:`band_hashes`."""
     bands = []
     for b in range(_BANDS):
         h = "CAST(0 AS BIGINT)"
@@ -670,21 +595,19 @@ def dedup_minhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-char fold if handed the raw expression.
     sig_df = corpus.select(
         "doc_id",
-        F.expr(_shingles_sqlx(_TOKENS_SQLX)).alias("sset"),
-        F.expr(_token_hashes_sqlx(_TOKENS_SQLX)).alias("th"),
+        F.expr(shingles(tokens())).alias("sset"),
+        F.expr(token_hashes(tokens())).alias("th"),
     ).select(
         "doc_id",
         "sset",
-        F.expr(_minhash_signature_sqlx(_shingle_hashes_sqlx("th"))).alias(
-            "sig"
-        ),
+        F.expr(minhash_signature(shingle_hashes("th"))).alias("sig"),
     ).persist()  # lifecycle: see the persist-barrier note in dedup_ngram_jaccard
     sh = sig_df.select("doc_id", "sset")
     # Bucket rows carry ONLY (doc_id, band): the shingle arrays must
     # not ride through the bucket shuffle and pair-dedup exchange.
     buckets = sig_df.select(
         "doc_id",
-        F.posexplode(F.expr(_band_hashes_sqlx("sig"))).alias("band_idx", "band_hash"),
+        F.posexplode(F.expr(band_hashes("sig"))).alias("band_idx", "band_hash"),
     )
     a = buckets.alias("a")
     b = buckets.alias("b")
@@ -871,10 +794,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CollapseProject would otherwise re-derive the whole fold per
     # reference.
     fp = (
-        corpus.select("doc_id", tokens().alias("toks"))
-        .select("doc_id", token_hashes(F.col("toks")).alias("th"))
+        corpus.select("doc_id", F.expr(tokens()).alias("toks"))
+        .select("doc_id", F.expr(token_hashes("toks")).alias("th"))
         .select(
-            "doc_id", simhash_counters(shingle_hashes(F.col("th"))).alias("counters")
+            "doc_id", simhash_counters(F.expr(shingle_hashes("th"))).alias("counters")
         )
         .select("doc_id", simhash_from_counters(F.col("counters")).alias("fp"))
         .persist()  # lifecycle: see persist-barrier note in dedup_ngram_jaccard
@@ -959,13 +882,11 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         (F.col("vec_id") % _NEAR_OFFSET).alias("block_key"),
-        norm(F.col("embedding")).alias("nrm"),
+        F.expr(norm("embedding")).alias("nrm"),
     )
     a = normed.alias("a")
     b = normed.alias("b")
-    sim = cosine(
-        F.col("a.embedding"), F.col("b.embedding"), F.col("a.nrm"), F.col("b.nrm")
-    )
+    sim = F.expr(cosine("a.embedding", "b.embedding", "a.nrm", "b.nrm"))
     return (
         a.join(
             b,
@@ -1183,7 +1104,7 @@ def dedup_binary_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = seeded_exact_corpus(load_table(spark, sf_dir, "documents"))
     payloads = corpus.select(
         "doc_id",
-        F.encode(F.substring(normalized(), 1, 32), "utf-8").alias("payload"),
+        F.encode(F.expr(_block_key()), "utf-8").alias("payload"),
     )
     return (
         payloads.groupBy(F.sha2(F.col("payload"), 256).alias("payload_sha256"))
@@ -1241,7 +1162,10 @@ def pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     normed = docs.select(
-        "doc_id", "lang", normalized().alias("norm"), tokens().alias("toks")
+        "doc_id",
+        "lang",
+        F.expr(normalized()).alias("norm"),
+        F.expr(tokens()).alias("toks"),
     )
     # keep-min-doc_id per norm as ONE window shuffle, not
     # groupBy(min) + join-back: the join form shuffles twice (norm,
@@ -1352,18 +1276,16 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("cid"),
             F.col("embedding").alias("cvec"),
-            norm(F.col("embedding")).alias("cnrm"),
+            F.expr(norm("embedding")).alias("cnrm"),
         )
     )
     base = emb.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
+        "vec_id", "embedding", F.expr(norm("embedding")).alias("nrm")
     )
     sims = base.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "cid",
-        cosine(
-            F.col("embedding"), F.col("cvec"), F.col("nrm"), F.col("cnrm")
-        ).alias("sim"),
+        F.expr(cosine("embedding", "cvec", "nrm", "cnrm")).alias("sim"),
     )
     # argmax via max(struct(sim, -cid)): struct ordering compares sim
     # first, then -cid — highest sim wins, ties to the SMALLEST cid —
@@ -1480,7 +1402,7 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.col("text"), F.lit(" trailing marker")).alias("text"),
         )
     )
-    w = Window.partitionBy(F.sha2(normalized(), 256)).orderBy("doc_id")
+    w = Window.partitionBy(F.sha2(F.expr(normalized()), 256)).orderBy("doc_id")
     hashed = widen_for_python(corpus).withColumn(
         "rn", F.row_number().over(w)
     )
@@ -1492,8 +1414,8 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed.filter(F.col("rn") == 1)
         .select(
             "doc_id",
-            F.expr(_BLOCK_KEY_SQLX).alias("block_key"),
-            F.expr(_shingles_sqlx(_TOKENS_SQLX)).alias("sset"),
+            F.expr(_block_key()).alias("block_key"),
+            F.expr(shingles(tokens())).alias("sset"),
         )
         .persist()
     )
@@ -1702,35 +1624,22 @@ def _seeded_span_corpus(docs: DataFrame) -> DataFrame:
         (F.col("doc_id") + _SPAN_OFFSET).alias("doc_id"),
         F.concat(
             F.lit("injected preamble alpha beta gamma delta "),
-            F.array_join(F.slice(tokens(), 5, 20), " "),
+            F.array_join(F.slice(F.expr(tokens()), 5, 20), " "),
             F.lit(" epsilon zeta eta theta closing omega"),
         ).alias("text"),
     )
     return docs.select("doc_id", "text").unionByName(mids)
 
 
-def positional_shingles(tok_col: Column, k: int) -> Column:
+def positional_shingles(toks: str, k: int) -> str:
     """ORDERED word k-gram array (index i = shingle starting at token
     i+1) — the position-preserving sibling of ``shingles()`` (no
     ``array_distinct``), built with the same shifted-slice ``zip_with``
     fold so the token expression is referenced O(k) times per ROW, not
     per output element (see shingles() for the measured O(tokens²)
-    trap). Caller must guarantee ``size(tok_col) >= k``: every shifted
+    trap). Caller must guarantee ``size(toks) >= k``: every shifted
     slice then has the full ``size-k+1`` elements and no NULL padding
     (= no partial shingles) occurs."""
-    m = F.size(tok_col) - (k - 1)
-    acc = F.slice(tok_col, 1, m)
-    for j in range(2, k + 1):
-        acc = F.zip_with(
-            acc, F.slice(tok_col, j, m), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return acc
-
-
-def _positional_shingles_sqlx(toks: str, k: int) -> str:
-    """Spark-SQL string twin of :func:`positional_shingles` — same
-    shifted-slice zip_with fold (no greatest: caller guarantees
-    size >= k, exactly the Column form's contract)."""
     m = f"(size({toks}) - {k - 1})"
     acc = f"slice({toks}, 1, {m})"
     for j in range(2, k + 1):
@@ -1825,13 +1734,13 @@ def dedup_substring_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = widen_scan(
         _seeded_span_corpus(load_table(spark, sf_dir, "documents"))
     )
-    tk = tokens()
+    tk = F.expr(tokens())
     long_docs = corpus.select("doc_id", tk.alias("tk")).filter(
         F.size("tk") >= _SPAN_K
     )
     sh = long_docs.select(
         "doc_id",
-        F.posexplode(F.expr(_positional_shingles_sqlx("tk", _SPAN_K))).alias(
+        F.posexplode(F.expr(positional_shingles("tk", _SPAN_K))).alias(
             "pos0", "s"
         ),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "s")
@@ -1961,12 +1870,12 @@ def dedup_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = widen_scan(
         _seeded_span_corpus(load_table(spark, sf_dir, "documents"))
     )
-    tk = tokens()
+    tk = F.expr(tokens())
     toks = corpus.select("doc_id", tk.alias("tk"))
     long_docs = toks.filter(F.size("tk") >= _SPAN_K)
     sh = long_docs.select(
         "doc_id",
-        F.posexplode(F.expr(_positional_shingles_sqlx("tk", _SPAN_K))).alias(
+        F.posexplode(F.expr(positional_shingles("tk", _SPAN_K))).alias(
             "pos0", "s"
         ),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "s")
@@ -2144,15 +2053,13 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             corpus.select(
                 "doc_id",
-                F.expr(_shingles_sqlx(_TOKENS_SQLX)).alias("sset"),
-                F.expr(_token_hashes_sqlx(_TOKENS_SQLX)).alias("th"),
+                F.expr(shingles(tokens())).alias("sset"),
+                F.expr(token_hashes(tokens())).alias("th"),
             )
             .select(
                 "doc_id",
                 "sset",
-                F.expr(
-                    _minhash_signature_sqlx(_shingle_hashes_sqlx("th"))
-                ).alias("sig"),
+                F.expr(minhash_signature(shingle_hashes("th"))).alias("sig"),
             )
             .persist()  # both the band explode and the sset re-attach
         )
@@ -2163,7 +2070,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     def buckets(sig_df: DataFrame) -> DataFrame:
         return sig_df.select(
             "doc_id",
-            F.posexplode(F.expr(_band_hashes_sqlx("sig"))).alias(
+            F.posexplode(F.expr(band_hashes("sig"))).alias(
                 "band_idx", "band_hash"
             ),
         )
@@ -2273,7 +2180,7 @@ def sample_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = seeded_exact_corpus(load_table(spark, sf_dir, "documents"))
     w = Window.partitionBy("content_hash")
     hashed = corpus.select(
-        "doc_id", F.sha2(normalized(), 256).alias("content_hash")
+        "doc_id", F.sha2(F.expr(normalized()), 256).alias("content_hash")
     )
     return (
         hashed.withColumn("n_copies", F.count("*").over(w))
@@ -2322,7 +2229,7 @@ def _inc_span_batch(docs: DataFrame) -> DataFrame:
         (-(F.col("doc_id") * 2 + 1)).alias("doc_id"),
         F.concat(
             F.lit("fresh intro one two three "),
-            F.array_join(F.slice(tokens(), 5, 20), " "),
+            F.array_join(F.slice(F.expr(tokens()), 5, 20), " "),
             F.lit(" fresh outro seven eight"),
         ).alias("text"),
     )
@@ -2438,13 +2345,13 @@ def dedup_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch_dir(), f"substr_sh_index_{_src_tag(sf_dir, 'documents')}"
     )
     if not os.path.exists(os.path.join(idx_path, "_SUCCESS")):
-        tk = tokens()
+        tk = F.expr(tokens())
         (
             widen_scan(docs).select("doc_id", tk.alias("tk"))
             .filter(F.size("tk") >= _SPAN_K)
             .select(
                 F.explode(
-                    F.expr(_positional_shingles_sqlx("tk", _SPAN_K))
+                    F.expr(positional_shingles("tk", _SPAN_K))
                 ).alias("s")
             )
             .distinct()
@@ -2454,12 +2361,12 @@ def dedup_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = spark.read.parquet(idx_path)
 
     batch = _inc_span_batch(docs)
-    btk = batch.select("doc_id", tokens().alias("tk")).filter(
+    btk = batch.select("doc_id", F.expr(tokens()).alias("tk")).filter(
         F.size("tk") >= _SPAN_K
     )
     bsh = btk.select(
         "doc_id",
-        F.posexplode(F.expr(_positional_shingles_sqlx("tk", _SPAN_K))).alias(
+        F.posexplode(F.expr(positional_shingles("tk", _SPAN_K))).alias(
             "pos0", "s"
         ),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "s")

@@ -443,7 +443,7 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.ranks import (
         histogram_global_rank_multi,
-        ntile_from_rank_sql,
+        ntile_from_rank,
     )
     orders = load_table(spark, sf_dir, "orders")
     # One scan + one exchange: collapse to per-customer (last order,
@@ -483,16 +483,15 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r15 (guide §4.4): the three quintile scores as SQL strings in
     # ONE projection — the chained withColumn/ntile loop was ~0.6 s of
-    # py4j plan-construction per build. Identical integer arithmetic
-    # (ntile_from_rank_sql is the operation-for-operation twin).
+    # py4j plan-construction per build.
     return scored.selectExpr(
         "custkey",
         "recency_days",
         "frequency",
         "CAST(monetary_u AS DOUBLE) / 100.0D AS monetary",
-        f"(6 - {ntile_from_rank_sql('_ri', '_n', 5)}) AS r_score",
-        f"{ntile_from_rank_sql('_fi', '_n', 5)} AS f_score",
-        f"{ntile_from_rank_sql('_mi', '_n', 5)} AS m_score",
+        f"(6 - {ntile_from_rank('_ri', '_n', 5)}) AS r_score",
+        f"{ntile_from_rank('_fi', '_n', 5)} AS f_score",
+        f"{ntile_from_rank('_mi', '_n', 5)} AS m_score",
     ).selectExpr(
         "*",
         "CAST(r_score * 100 + f_score * 10 + m_score AS INT) AS rfm_cell",

@@ -62,7 +62,7 @@ def text_analysis_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order function over the per-row token array.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens()
+    toks = F.expr(tokens())
     df = docs.select("doc_id", "lang", "n_chars", toks.alias("toks"))
     n = F.size("toks")
     n_uniq = F.size(F.array_distinct("toks"))
@@ -113,7 +113,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram-heuristic shape of a fastText-less lang-ID pass. Narrow-only
     at any scale."""
     docs = load_table(spark, sf_dir, "documents")
-    df = docs.select("doc_id", "lang", tokens().alias("toks"))
+    df = docs.select("doc_id", "lang", F.expr(tokens()).alias("toks"))
     n = F.size("toks")
     en_score = (
         F.size(F.filter("toks", lambda t: t.isin(_STOPWORDS))).cast("double") / n
@@ -177,7 +177,7 @@ def text_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the <=K-row survivor set, bounded by construction.
     """
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens()).alias("term"))
+    tok = docs.select("doc_id", F.explode(F.expr(tokens())).alias("term"))
     stats = tok.groupBy("term").agg(
         F.count("*").alias("tf_total"),
         F.countDistinct("doc_id").alias("doc_freq"),
@@ -225,7 +225,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reordering two tokens changes the fingerprint — unlike a content
     set hash. Narrow-only at any scale."""
     docs = load_table(spark, sf_dir, "documents")
-    df = docs.select("doc_id", tokens().alias("toks"))
+    df = docs.select("doc_id", F.expr(tokens()).alias("toks"))
     fp = F.aggregate(
         F.transform(
             F.col("toks"),
@@ -275,7 +275,7 @@ def text_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics here stay exact.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens()
+    toks = F.expr(tokens())
     # trigrams as zip_with over three shifted slices — every lambda
     # references only its own element, so the token split evaluates
     # O(1) times per ROW; an element_at(toks, i) inside the lambda
@@ -348,7 +348,7 @@ def text_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row token work runs on every core (no-op on split inputs)
     docs = widen_scan(load_table(spark, sf_dir, "documents"))
     sh = docs.select(
-        "doc_id", F.explode(shingles(tokens())).alias("g")
+        "doc_id", F.explode(F.expr(shingles(tokens()))).alias("g")
     )
     bench = (
         sh.filter(F.col("doc_id") < _CONTAM_BENCH_DOCS)
@@ -424,7 +424,7 @@ def text_token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    n_tok = F.size(tokens()).cast("long")
+    n_tok = F.size(F.expr(tokens())).cast("long")
     df = docs.select("doc_id", "lang", n_tok.alias("n_tokens")).withColumn(
         "cum_tokens", F.sum("n_tokens").over(w)
     )
@@ -598,7 +598,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle equi-join on token — same plan, Catalyst picks by size.
     """
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens()).alias("token"))
+    tok = docs.select("doc_id", F.explode(F.expr(tokens())).alias("token"))
     freq = tok.groupBy("token").agg(F.count("*").alias("cnt"))
     total = freq.agg(F.sum("cnt").alias("n"))
     terms = (
@@ -712,15 +712,13 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the extra raw-text exchange only adds cost. Left unwidened.
     docs = load_table(spark, sf_dir, "documents")
     corpus = seeded_pii_corpus(docs, keep=("lang",))
-    red = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace("text", _EMAIL_RE, "[EMAIL]"),
-            _PHONE_RE,
-            "[PHONE]",
-        ),
-        _IP_RE,
-        "[IP]",
-    )
+    # SQL text so the dedup key below is normalized() over it; the
+    # patterns' backslashes are escaped for the default parser
+    red_sql = "text"
+    for pat, tag in ((_EMAIL_RE, "EMAIL"), (_PHONE_RE, "PHONE"), (_IP_RE, "IP")):
+        lit = pat.replace("\\", "\\\\")
+        red_sql = f"regexp_replace({red_sql}, '{lit}', '[{tag}]')"
+    red = F.expr(red_sql)
     # had_pii ⟺ some replacement fired ⟺ redacted differs from the
     # original — one string compare instead of the three extra
     # regexp_extract_all passes the standalone text_pii_redact needs
@@ -729,7 +727,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         (red != F.col("text")).alias("had_pii"),
-        normalized(red).alias("norm"),
+        F.expr(normalized(red_sql)).alias("norm"),
     ).withColumn("toks", F.split("norm", " "))
     ttr = F.size(F.array_distinct("toks")).cast("double") / F.size("toks")
     gated = normed.filter(
@@ -828,7 +826,7 @@ def text_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derivation trap — LESSONS #4/#14).
     """
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", tokens().alias("toks")).withColumn(
+    base = docs.select("doc_id", F.expr(tokens()).alias("toks")).withColumn(
         "n_chunks",
         (
             F.lit(1)
@@ -894,7 +892,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a 100 TB corpus just to re-group rows that started colocated.
     """
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", "lang", tokens().alias("toks"))
+    base = docs.select("doc_id", "lang", F.expr(tokens()).alias("toks"))
     n = F.size("toks")
     max_freq = F.array_max(
         F.transform(
@@ -1114,7 +1112,7 @@ def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Top-k selection is a sort-limit (TakeOrdered, no full sort).
     """
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens().alias("toks")
+        "doc_id", F.expr(tokens()).alias("toks")
     )
     dl = docs.select("doc_id", F.size("toks").alias("dl"))
     corpus = dl.agg(
@@ -1226,7 +1224,7 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select("lang", F.explode(tokens()).alias("term"))
+        docs.select("lang", F.explode(F.expr(tokens())).alias("term"))
         .groupBy("lang", "term")
         .agg(F.count("*").alias("n"))
     )
@@ -1326,7 +1324,7 @@ def text_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window exchange right after tokenize already spreads the work,
     # so the extra raw-text exchange only adds cost. Left unwidened.
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(tokens()).alias("term")).distinct()
+    toks = docs.select("doc_id", F.explode(F.expr(tokens())).alias("term")).distinct()
     df = toks.groupBy("term").agg(F.count("*").alias("df"))
     vocab = df.orderBy(F.col("df").desc(), "term").limit(_PMI_VOCAB)
     vt = toks.join(F.broadcast(vocab.select("term")), "term").select(
@@ -1458,7 +1456,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select(F.explode(tokens()).alias("term"))
+        docs.select(F.explode(F.expr(tokens())).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("n"))
     )
@@ -1570,7 +1568,7 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (guide §2.5): widen the one-row-group fixture scan so the
     # per-row token work runs on every core (no-op on split inputs)
     docs = widen_scan(load_table(spark, sf_dir, "documents"))
-    toks = tokens()
+    toks = F.expr(tokens())
     m = F.greatest(F.size(toks) - 1, F.lit(0))
     bigrams = F.zip_with(
         F.slice(toks, 1, m),
@@ -1708,7 +1706,7 @@ def text_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (guide §2.5): widen the one-row-group fixture scan so the
     # per-row token work runs on every core (no-op on split inputs)
     docs = widen_scan(load_table(spark, sf_dir, "documents"))
-    df = docs.select("doc_id", "lang", tokens().alias("toks"))
+    df = docs.select("doc_id", "lang", F.expr(tokens()).alias("toks"))
     n = F.size("toks")
     len_sum = F.aggregate(
         F.col("toks"), F.lit(0), lambda a, t: a + F.length(t)
@@ -1826,7 +1824,7 @@ def text_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", "lang", F.explode(tokens()).alias("token")
+        "doc_id", "lang", F.explode(F.expr(tokens())).alias("token")
     )
     freq_s = tok.groupBy("token").agg(F.count("*").alias("cs"))
     freq_t = (
@@ -1993,9 +1991,9 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     token (broadcast while small, shuffle beyond — AQE picks).
     """
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(tokens().alias("t"))
+    tok = docs.select(F.expr(tokens()).alias("t"))
     vocab = (
-        docs.select(F.explode(tokens()).alias("token"))
+        docs.select(F.explode(F.expr(tokens())).alias("token"))
         .filter(F.length("token") >= _TR_MIN_LEN)
         .groupBy("token")
         .agg(F.count("*").alias("cnt"))
@@ -2261,7 +2259,7 @@ def pipeline_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = seeded_exact_corpus(
         load_table(spark, sf_dir, "documents")
     ).persist()
-    tok = corpus.select("doc_id", F.explode(tokens()).alias("token"))
+    tok = corpus.select("doc_id", F.explode(F.expr(tokens())).alias("token"))
     freq = tok.groupBy("token").agg(F.count("*").alias("cnt"))
     total = freq.agg(F.sum("cnt").alias("n"))
     terms = (
@@ -2304,7 +2302,7 @@ def pipeline_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("tail")
         .alias("bucket"),
     )
-    wsize = Window.partitionBy(F.sha2(normalized(), 256))
+    wsize = Window.partitionBy(F.sha2(F.expr(normalized()), 256))
     sized = corpus.select(
         "doc_id", F.count("*").over(wsize).alias("n_copies")
     )
@@ -2438,7 +2436,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row token work runs on every core (no-op on split inputs)
     docs = widen_scan(load_table(spark, sf_dir, "documents"))
     w_arr = F.array(*[F.lit(w).cast("long") for w in _QC_W_MICRO])
-    th = token_hashes(tokens())
+    th = F.expr(token_hashes(tokens()))
     z = F.aggregate(
         th,
         F.lit(0).cast("long"),
@@ -2453,7 +2451,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         # count the raw split, not the hashed transform — size(th)
         # would re-derive every per-token char fold just to count
-        F.size(tokens()).alias("n"),
+        F.size(F.expr(tokens())).alias("n"),
         z.alias("z"),
     )
     avg_micro = F.col("z").cast("double") / F.col("n")
@@ -2598,7 +2596,7 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", "lang", F.explode(tokens()).alias("w")
+        "doc_id", "lang", F.explode(F.expr(tokens())).alias("w")
     )
     vocab = tok.select("w").filter(F.length("w") > 0).distinct()
     vp = vocab.select(
@@ -2705,8 +2703,8 @@ def pipeline_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (guide §2.5): widen the one-row-group fixture scan so the
     # per-row token work runs on every core (no-op on split inputs)
     docs = widen_scan(load_table(spark, sf_dir, "documents"))
-    toks = tokens()
-    th = token_hashes(toks)
+    toks = F.expr(tokens())
+    th = F.expr(token_hashes(tokens()))
     w_arr = F.array(*[F.lit(w).cast("long") for w in _QC_W_MICRO])
     z = F.aggregate(
         th,

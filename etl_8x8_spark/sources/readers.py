@@ -5,7 +5,7 @@ projections into the scan (row-group skipping + column pruning), so
 query builders just ``load_table(...).select(...).filter(...)`` and let
 the optimizer move the work into the reader.
 
-CSV / JSON-lines readers always take an explicit schema (never
+The JSON-lines reader always takes an explicit schema (never
 ``inferSchema`` — a full extra pass over 100 TB) mirroring the
 reference's boundary validation (R14, SURVEY.md §1.3).
 """
@@ -23,6 +23,13 @@ from etl_8x8_spark.sources.schemas import TABLE_SCHEMAS
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+_PINNED_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parser.escapedStringLiterals": "false",
+}
 
 
 def pin_session_confs(spark: SparkSession) -> None:
@@ -43,16 +50,21 @@ def pin_session_confs(spark: SparkSession) -> None:
       rejects; it is read as nanos-since-epoch and floor-converted to
       micros (the same truncation DuckDB 1.x applies on read).
     - ``spark.sql.parser.escapedStringLiterals=false`` (r16 ADVICE):
-      the SQL-string expression twins (dedup._NORM_SQLX regexes, the
-      BPE merge literals in text.py) encode ``'\\\\s+'``-style escapes
-      that unescape correctly only under the default parser; a
-      driver-supplied session with the legacy conf set would silently
-      flip them to literal-backslash matches and diverge from the
-      Column forms and the oracle.
+      the engine's Spark expressions are SQL text (dedup.normalized's
+      whitespace regex, which every tokens()-based text key runs, the
+      redaction patterns and BPE merge literals in text.py) and encode
+      ``'\\\\s+'``-style escapes that unescape correctly only under the
+      default parser; a driver-supplied session with the legacy conf
+      set would silently flip them to literal-backslash matches and
+      diverge from the DuckDB oracles.
+
+    Each conf is set only when it differs: every ``load_table`` calls
+    this, and setting a deprecated conf (``escapedStringLiterals`` in
+    Spark 4) logs a WARN line per call even when the value is unchanged.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+    for key, value in _PINNED_CONFS.items():
+        if spark.conf.get(key) != value:
+            spark.conf.set(key, value)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -132,16 +144,6 @@ def read_json_lines(
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-    )
-
-
-def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Delimited ingest with an explicit schema (inference off)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .csv(path)
     )
 
 

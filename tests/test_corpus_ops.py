@@ -24,7 +24,7 @@ class TestDocChunking:
 
         chunks = _q("text_doc_chunking")(spark, sf_dir)
         docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.size(tokens()).alias("n")
+            "doc_id", F.size(F.expr(tokens())).alias("n")
         )
         per_doc = chunks.groupBy("doc_id").agg(
             F.count("*").alias("n_chunks"),
@@ -125,7 +125,7 @@ class TestRepetitionFilter:
             "doc_id", "top_token_freq"
         )
         docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.explode(tokens()).alias("tok")
+            "doc_id", F.explode(F.expr(tokens())).alias("tok")
         )
         want = (
             docs.groupBy("doc_id", "tok")

@@ -356,8 +356,8 @@ def test_minhash_signature_triple_parity(spark, tokens):
 
     df = spark.createDataFrame([(tokens,)], "toks array<string>")
     srow = (
-        df.select(token_hashes(F.col("toks")).alias("th"))
-        .select(minhash_signature(shingle_hashes(F.col("th"))).alias("sig"))
+        df.select(F.expr(token_hashes("toks")).alias("th"))
+        .select(F.expr(minhash_signature(shingle_hashes("th"))).alias("sig"))
         .first()
     )
     assert list(srow["sig"]) == expected
@@ -387,7 +387,7 @@ def test_shingle_strings_cross_engine_parity(spark, tokens):
     from etl_8x8_spark.operators.dedup import _shingles_sql, shingles
 
     df = spark.createDataFrame([(tokens,)], "toks array<string>")
-    srow = df.select(shingles(F.col("toks")).alias("s")).first()
+    srow = df.select(F.expr(shingles("toks")).alias("s")).first()
     con = duckdb.connect()
     sql_toks = "[" + ", ".join("'" + t.replace("'", "''") + "'" for t in tokens) + "]"
     drow = con.execute(

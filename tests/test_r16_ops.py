@@ -48,6 +48,10 @@ class TestCheckpointEscapeHatch:
         assert checkpoint_every() == 3
         monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_EVERY", "0")
         assert checkpoint_every() == 0
+        for bad in ("", "eight", "2.5", "-1"):
+            monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_EVERY", bad)
+            with pytest.raises(ValueError):
+                checkpoint_every()
 
     def test_checkpoint_truncates_lineage(self, spark, monkeypatch):
         """With cadence 1 every round is a localCheckpoint: the

@@ -135,7 +135,6 @@ class TestPiiRedact:
     def test_planted_pii_found_and_scrubbed(self, spark, sf_dir):
         import re
 
-        from etl_8x8_spark.operators.dedup import normalized  # noqa: F401
         from etl_8x8_spark.operators.text import (
             _EMAIL_RE,
             _IP_RE,

@@ -60,7 +60,7 @@ class TestDedupContainment:
         from etl_8x8_spark.sources.readers import load_table
 
         corpus = seeded_contain_corpus(load_table(spark, sf_dir, "documents"))
-        sh = corpus.select("doc_id", shingles(tokens()).alias("sset"))
+        sh = corpus.select("doc_id", F.expr(shingles(tokens())).alias("sset"))
         orig = sh.filter(F.col("doc_id") < _CONTAIN_OFFSET).alias("o")
         wrap = sh.filter(F.col("doc_id") >= _CONTAIN_OFFSET).alias("w")
         jac = (
@@ -253,7 +253,6 @@ class TestTextLineDedup:
     def test_shared_lines_survive_exactly_once(self, spark, sf_dir, queries):
         """Each of the three planted boilerplate lines must be kept in
         exactly one document corpus-wide."""
-        from etl_8x8_spark.operators.dedup import normalized  # noqa: F401
         from etl_8x8_spark.operators.text import _SHARED_LINES
 
         out = queries["text_line_dedup"].builder(spark, sf_dir)

@@ -305,7 +305,7 @@ class TestPmiCooccur:
         out = queries["text_pmi_cooccur"].builder(spark, sf_dir)
         first = out.limit(1).collect()[0]
         docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", tokens().alias("toks")
+            "doc_id", F.expr(tokens()).alias("toks")
         )
         has_a = docs.filter(F.array_contains("toks", first["term_a"]))
         n_both = has_a.filter(F.array_contains("toks", first["term_b"])).count()
@@ -488,7 +488,7 @@ class TestZipfFit:
 
         docs = load_table(spark, sf_dir, "documents")
         tf = (
-            docs.select(F.explode(tokens()).alias("term"))
+            docs.select(F.explode(F.expr(tokens())).alias("term"))
             .groupBy("term")
             .agg(F.count("*").alias("n"))
             .orderBy(F.col("n").desc(), "term")
@@ -683,7 +683,7 @@ class TestBigramPerplexity:
         from etl_8x8_spark.sources.readers import load_table
 
         docs = load_table(spark, sf_dir, "documents")
-        toks = tokens()
+        toks = F.expr(tokens())
         m = F.greatest(F.size(toks) - 1, F.lit(0))
         bigrams = F.zip_with(
             F.slice(toks, 1, m),

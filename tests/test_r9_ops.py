@@ -93,12 +93,12 @@ class TestSubstringSpan:
         from pyspark.sql import Window
 
         corpus = spark.createDataFrame(corpus_rows, "doc_id long, text string")
-        long_docs = corpus.select("doc_id", tokens().alias("tk")).filter(
+        long_docs = corpus.select("doc_id", F.expr(tokens()).alias("tk")).filter(
             F.size("tk") >= _SPAN_K
         )
         sh = long_docs.select(
             "doc_id",
-            F.posexplode(positional_shingles(F.col("tk"), _SPAN_K)).alias(
+            F.posexplode(F.expr(positional_shingles("tk", _SPAN_K))).alias(
                 "pos0", "s"
             ),
         ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "s")
@@ -304,7 +304,7 @@ class TestSubstringScrub:
         corpus = {
             r["doc_id"]: r["norm"]
             for r in _seeded_span_corpus(load_table(spark, sf_dir, "documents"))
-            .select("doc_id", normalized().alias("norm"))
+            .select("doc_id", F.expr(normalized()).alias("norm"))
             .collect()
         }
         injected = [i for i in rows if i >= _SPAN_OFFSET]
@@ -407,9 +407,9 @@ class TestPqAdcSearch:
             F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
         )
         d2 = (
-            dot(F.col("qe"), F.col("qe"))
-            - 2 * dot(F.col("qe"), F.col("embedding"))
-            + dot(F.col("embedding"), F.col("embedding"))
+            F.expr(dot("qe", "qe"))
+            - 2 * F.expr(dot("qe", "embedding"))
+            + F.expr(dot("embedding", "embedding"))
         )
         s = emb.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
             "q_id", "vec_id", d2.alias("d2")

@@ -1,5 +1,5 @@
 """Linearity audits for the two r10-new iterative operators at N×
-scale (r10 verdict item 7), same protocol as tools/r10_scale_audit.py:
+scale (r10 verdict item 7):
 alongside `scale_experiment.py`'s wall-clock ratios, count the
 INTERMEDIATE volumes that would betray a super-linear plan — wall
 clock on fixed cores saturates; these counts cannot.
